@@ -7,6 +7,7 @@ from __future__ import annotations
 import tarfile
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -17,11 +18,14 @@ from pyspark.sql.types import (
 )
 
 from trackdechets_etl_spark.io.readers import (
+    TABLE_SCHEMAS,
     extract_tar_members,
     read_csv_with_schema,
+    read_table,
     resolve_source_path,
 )
 from trackdechets_etl_spark.io.writers import write_csv, write_parquet
+from tests.conftest import SF_DIR
 
 ICPE_LIKE_SCHEMA = StructType(
     [
@@ -322,3 +326,57 @@ def test_jdbc_partitioned_read_parallelism(spark, tmp_path):
     assert sorted(r["n_nationkey"] for r in df.collect()) == sorted(
         r["n_nationkey"] for r in src.collect()
     )
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_declared_schemas_match_inference(spark, sf):
+    """Each declared corpus schema equals what Spark infers from the
+    stored files, so schema drift in the data fails here loudly."""
+    for name, schema in TABLE_SCHEMAS.items():
+        path = Path(SF_DIR).parent / sf / f"{name}.parquet"
+        inferred = spark.read.parquet(str(path)).schema
+        assert schema == inferred, name
+
+
+def test_read_table_declared_starts_no_job(spark):
+    """Building a query on the declared tables runs no schema-inference
+    job."""
+    sc = spark.sparkContext
+    group = "test_read_table_declared_starts_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        for name in TABLE_SCHEMAS:
+            read_table(spark, SF_DIR, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_session_turns_off_call_site_capture(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_events_nanos_read_matches_micros(spark, tmp_path):
+    """The events nanos→micros branch: a TIMESTAMP(NANOS) copy of
+    events reads back with the same ``ts`` values as the MICROS
+    original."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = table.schema.get_field_index("ts")
+    table = table.set_column(i, "ts", table["ts"].cast(pa.timestamp("ns")))
+    pq.write_table(table, str(tmp_path / "events.parquet"))
+    stored = pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type
+    assert stored == pa.timestamp("ns")
+    raw = spark.read.parquet(str(tmp_path / "events.parquet"))
+    assert dict(raw.dtypes)["ts"] == "bigint"  # the branch under test fires
+
+    def ts(sf_dir):
+        df = read_table(spark, sf_dir, "events")
+        return [(r.event_id, r.ts) for r in df.select("event_id", "ts").collect()]
+
+    nanos = ts(str(tmp_path))
+    assert sorted(nanos) == sorted(ts(SF_DIR))
+    assert len(nanos) == table.num_rows

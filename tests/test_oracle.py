@@ -13,14 +13,17 @@ import math
 
 import pytest
 
+from perfbench.workloads import WORKLOADS
 from trackdechets_etl_spark.queries import all_queries
 from tests.conftest import SF_DIR
 
-# r15: slow shard — excluded from the default pytest run (see
-# pytest.ini); run the full suite with -m "slow or not slow".
-pytestmark = pytest.mark.slow
-
 REGISTRY = all_queries()
+
+# The benchmark's queries stay in the default shard, so a plain
+# ``pytest tests/`` compares the read path against DuckDB end to end;
+# the rest of the registry is the slow shard (see pytest.ini), run with
+# -m "slow or not slow".
+DEFAULT_SHARD = {q for w in WORKLOADS.values() for q in w.queries}
 
 
 def _normalize(rows, colnames):
@@ -47,7 +50,13 @@ def _normalize(rows, colnames):
     return sorted(normed)
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
+@pytest.mark.parametrize(
+    "name",
+    [
+        n if n in DEFAULT_SHARD else pytest.param(n, marks=pytest.mark.slow)
+        for n in sorted(REGISTRY)
+    ],
+)
 def test_query_matches_oracle(name, spark, duck):
     spec = REGISTRY[name]
     sdf = spec.fn(spark, SF_DIR)

@@ -94,3 +94,32 @@ def test_gate_visible_in_plan(spark, monkeypatch):
     # executed plan shows its Scan ExistingRDD + __gr_pid columns)
     assert "percent_rank" not in dplan
     assert "__gr_pid" in dplan
+
+
+def test_gate_sizes_directory_datasets(spark, tmp_path, monkeypatch):
+    """The size gate reads a directory-layout ``orders`` through
+    ``dataset_bytes`` and reads its threshold at call time: set after
+    import below the directory's size, it takes the distributed path;
+    at the default, the window path."""
+    import shutil
+
+    from trackdechets_etl_spark.io.readers import dataset_bytes
+
+    spark.read.parquet(f"{SF_DIR}/orders.parquet").repartition(3).write.parquet(
+        str(tmp_path / "orders.parquet")
+    )
+    shutil.copy(f"{SF_DIR}/customer.parquet", tmp_path / "customer.parquet")
+    size = dataset_bytes(spark, str(tmp_path / "orders.parquet"))
+    assert size > 0
+
+    def plan():
+        df = analytics._window_rank_ratios(spark, str(tmp_path))
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    monkeypatch.delenv("SPARK_GRAFT_RANK_SEGMENT_WINDOW_MAX_BYTES", raising=False)
+    local = plan()
+    assert "percent_rank" in local and "__gr_pid" not in local
+
+    monkeypatch.setenv("SPARK_GRAFT_RANK_SEGMENT_WINDOW_MAX_BYTES", str(size - 1))
+    dist = plan()
+    assert "percent_rank" not in dist and "__gr_pid" in dist

@@ -6,8 +6,15 @@ explicit column ``names``/``dtype``/``parse_dates``
 explicit SELECT lists (``dags/icpe-siretisation.py:230-233``,
 ``dags/publish-open-data.py:26-30``). Nothing is inferred. We keep that
 discipline: every reader takes a ``StructType`` (or pushes an explicit
-query to JDBC). At 100 TB schema inference is a full extra scan — never
-enable it.
+query to JDBC), and the corpus tables carry one declared schema each in
+:data:`TABLE_SCHEMAS`, so :func:`read_table` starts no Spark job. At
+100 TB schema inference is a full extra scan — never enable it.
+
+The one exception is ``events``: its ``ts`` column is stored as
+TIMESTAMP(NANOS) by some sources and TIMESTAMP(MICROS) by others, and no
+declared type reads both correctly (``timestamp_ntz`` fails on a NANOS
+file; ``bigint`` silently reads a MICROS file as nanos). It keeps the
+inferred read and branches on the type it finds.
 
 The reference's pickle relay (S7, ``to_pickle``/``read_pickle`` at every
 Airflow task boundary) has no equivalent here: one lazy lineage replaces
@@ -23,7 +30,17 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 
 def resolve_source_path(url_or_path: str, dest: str) -> str:
@@ -167,6 +184,18 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 _CPU_HEAVY_TABLES = {"documents", "embeddings"}
 
 
+def dataset_bytes(spark: SparkSession, path: str) -> int:
+    """Total stored bytes of a dataset: one file, or every file under a
+    directory (checksum and marker files included), on any filesystem
+    Hadoop resolves (local, ``hdfs://``, ``s3://``). One
+    ``FileSystem.getContentSummary`` call through the JVM; raises if
+    ``path`` does not exist."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.getContentSummary(hpath).getLength()
+
+
 def _fan_out_small_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Parallelize scans of files Spark cannot split.
 
@@ -174,7 +203,7 @@ def _fan_out_small_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFr
     corpus writes ONE row group per file, so every scan arrives as a
     single partition and all per-row work (string ops, hashing,
     shingling) serializes onto one core until the first shuffle. When
-    the file's estimated split count is below the session parallelism,
+    the dataset's estimated split count is below the session parallelism,
     repartition to fan the rows out — one tiny round-robin shuffle buys
     full-width execution of everything downstream.
 
@@ -182,13 +211,9 @@ def _fan_out_small_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFr
     yields thousands of splits, so ``est_splits >= parallelism`` and no
     extra shuffle is inserted.
     """
-    try:
-        size = Path(path).stat().st_size
-    except OSError:
-        return df
     max_bytes = int(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
     parallelism = spark.sparkContext.defaultParallelism
-    est_splits = max(1, size // max_bytes)
+    est_splits = max(1, dataset_bytes(spark, path) // max_bytes)
     if est_splits < parallelism:
         return df.repartition(parallelism)
     return df
@@ -199,24 +224,30 @@ def read_table(
 ) -> DataFrame:
     """Load one of the driver's synthetic tables (TESTDATA.md).
 
-    ``events.ts`` is TIMESTAMP(NANOS) in parquet; with
-    ``spark.sql.legacy.parquet.nanosAsLong`` it arrives as long nanos
-    and is converted here to a microsecond timestamp (truncating, the
-    same conversion DuckDB applies), keeping engine outputs comparable.
+    Every table except ``events`` is read with its declared
+    :data:`TABLE_SCHEMAS` entry, so building a query starts no Spark
+    job. ``events`` is read with the inferred schema because its stored
+    ``ts`` unit varies between sources: TIMESTAMP(NANOS) arrives, with
+    ``spark.sql.legacy.parquet.nanosAsLong``, as long nanos and is
+    converted here to a microsecond timestamp (truncating, the same
+    conversion DuckDB applies); TIMESTAMP(MICROS) arrives as a timestamp
+    and is kept.
 
     ``fan_out=True`` forces the small-scan fan-out (for fact spines
     feeding broadcast-join pipelines, where ALL work until the first
     aggregation runs inside the scan partitions); ``None`` auto-applies
     it to the CPU-heavy text/vector tables only.
     """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # Runtime-settable; applied here too so the engine works under a
         # caller-built SparkSession that lacks the session-factory conf.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        df = spark.read.parquet(path)
+        if dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    else:
+        df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
     if fan_out or (fan_out is None and name in _CPU_HEAVY_TABLES):
         df = _fan_out_small_scan(spark, df, path)
     return df
@@ -234,6 +265,97 @@ ALL_TABLES = (
     "documents",
     "embeddings",
 )
+
+
+# The stored schema of every corpus table but ``events`` (see
+# read_table), as Spark infers it from the parquet footer: timestamps
+# stored without a UTC adjustment read as TIMESTAMP_NTZ, and every field
+# is nullable. Built from literals because ``StructType.fromDDL`` needs a
+# live session. tests/test_io.py pins each entry against inference at
+# all three scale factors.
+TABLE_SCHEMAS: dict[str, StructType] = {
+    "region": StructType(
+        [
+            StructField("r_regionkey", IntegerType()),
+            StructField("r_name", StringType()),
+        ]
+    ),
+    "nation": StructType(
+        [
+            StructField("n_nationkey", IntegerType()),
+            StructField("n_name", StringType()),
+            StructField("n_regionkey", IntegerType()),
+        ]
+    ),
+    "customer": StructType(
+        [
+            StructField("c_custkey", LongType()),
+            StructField("c_name", StringType()),
+            StructField("c_nationkey", IntegerType()),
+            StructField("c_acctbal", DoubleType()),
+            StructField("c_mktsegment", StringType()),
+        ]
+    ),
+    "supplier": StructType(
+        [
+            StructField("s_suppkey", LongType()),
+            StructField("s_name", StringType()),
+            StructField("s_nationkey", IntegerType()),
+            StructField("s_acctbal", DoubleType()),
+        ]
+    ),
+    "part": StructType(
+        [
+            StructField("p_partkey", LongType()),
+            StructField("p_name", StringType()),
+            StructField("p_brand", StringType()),
+            StructField("p_type", StringType()),
+            StructField("p_size", IntegerType()),
+            StructField("p_retailprice", DoubleType()),
+        ]
+    ),
+    "orders": StructType(
+        [
+            StructField("o_orderkey", LongType()),
+            StructField("o_custkey", LongType()),
+            StructField("o_orderstatus", StringType()),
+            StructField("o_totalprice", DoubleType()),
+            StructField("o_orderdate", TimestampNTZType()),
+            StructField("o_orderpriority", StringType()),
+        ]
+    ),
+    "lineitem": StructType(
+        [
+            StructField("l_orderkey", LongType()),
+            StructField("l_partkey", LongType()),
+            StructField("l_suppkey", LongType()),
+            StructField("l_linenumber", IntegerType()),
+            StructField("l_quantity", DoubleType()),
+            StructField("l_extendedprice", DoubleType()),
+            StructField("l_discount", DoubleType()),
+            StructField("l_tax", DoubleType()),
+            StructField("l_returnflag", StringType()),
+            StructField("l_linestatus", StringType()),
+            StructField("l_shipdate", TimestampNTZType()),
+        ]
+    ),
+    "documents": StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("text", StringType()),
+            StructField("lang", StringType()),
+            StructField("source", StringType()),
+            StructField("n_chars", LongType()),
+        ]
+    ),
+    "embeddings": StructType(
+        [
+            StructField("vec_id", LongType()),
+            StructField("embedding", ArrayType(FloatType())),
+            StructField("label", IntegerType()),
+        ]
+    ),
+}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

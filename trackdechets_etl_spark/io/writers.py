@@ -10,9 +10,9 @@ JDBC writer batches at 1000+ rows). The REST sink (S10,
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame
+
+from trackdechets_etl_spark.io.readers import dataset_bytes
 
 
 def write_parquet(
@@ -63,12 +63,10 @@ def compact_parquet(
     footer reads dominate once files drop below ~tens of MB.
     Returns the number of output partitions written.
 
-    Sizing walks the local filesystem; on object storage swap the walk
-    for the Hadoop FileSystem API (same coalesce logic)."""
+    Sizing goes through the Hadoop FileSystem API, so it works on local,
+    HDFS and object-store paths alike."""
     df = spark.read.parquet(src_path)
-    total_bytes = sum(
-        f.stat().st_size for f in Path(src_path).rglob("*.parquet")
-    )
+    total_bytes = dataset_bytes(spark, src_path)
     n_parts = max(1, -(-total_bytes // target_file_bytes))  # ceil div
     df.coalesce(n_parts).write.mode("overwrite").parquet(dest_path)
     return n_parts

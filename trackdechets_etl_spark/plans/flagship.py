@@ -5,6 +5,11 @@
 scan→join→enrich→aggregate shape as the reference's siretisation +
 ``make_stats`` chain (reference ``dags/icpe-siretisation.py:305-357``).
 
+The revenue sum runs in ``DECIMAL(15,2)`` cents arithmetic, rounded to
+2 places and cast back to ``double``: a double sum depends on the order
+the engine adds in, so Spark and DuckDB could round it to different
+cents. Decimal addition is exact, so every order gives the same total.
+
 Scale notes:
 - ``nation`` (25 rows) is broadcast explicitly; ``customer`` is left to
   AQE, which converts it to broadcast when its post-filter size is under
@@ -26,6 +31,10 @@ DATE_LO = "1996-01-01"
 DATE_HI = "1998-01-01"
 
 
+def _cents(col: str):
+    return F.col(col).cast("decimal(15,2)")
+
+
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = read_table(spark, sf_dir, "lineitem")
     orders = read_table(spark, sf_dir, "orders").filter(
@@ -41,7 +50,9 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation.select("n_nationkey", "n_name")), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
+            F.round(F.sum(_cents("l_extendedprice") * (1 - _cents("l_discount"))), 2)
+            .cast("double")
+            .alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -49,7 +60,8 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 REVENUE_BY_NATION_SQL = f"""
 SELECT n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) AS revenue,
        count(*) AS n_items
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey

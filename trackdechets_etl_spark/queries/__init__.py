@@ -45,7 +45,16 @@ class QuerySpec:
 # a green driver row; the window now re-verifies plan-changed entries
 # and refreshes the oldest greens.
 _VERIFY_FIRST = [
-    # slots 1-5: entries whose plan or code path changed in THIS
+    # slots 1-3: the flagship revenue sum moved to DECIMAL(15,2) cents
+    # arithmetic (a double sum rounded to different cents than DuckDB on
+    # some inputs), which changes its plan and the plans of the two
+    # queries built on it. Plan-changed entries go first; the rest of
+    # the window keeps its order, and the two entries pushed past slot
+    # 50 now head _NEXT_ROTATION_QUEUE.
+    "flagship_revenue_by_nation",
+    "flagship_revenue_by_region",
+    "agg_revenue_rollup",
+    # slots 4-8: entries whose plan or code path changed in the round-15
     # optimization round (each bit-identity-pinned old-vs-new at 3 SFs
     # + interleaved A/B + full drive green before commit — see
     # OPTIMIZATION_r15.md): the 8-byte gram-key clip joins (BLEU +
@@ -58,7 +67,7 @@ _VERIFY_FIRST = [
     "text_dice_tversky",
     "graph_pagerank",
     "window_rank_ratios",
-    # slots 6-26: the displaced r15 queue, exactly as promised in the
+    # slots 9-28: the displaced r15 queue, exactly as promised in the
     # r14 window comments — first the six r13-evicted re-queues
     # (r13 verdict ask #1, deferred twice, pinned at the queue head
     # per ADVICE r14) plus the two caution/rotation tokens, then the
@@ -66,7 +75,6 @@ _VERIFY_FIRST = [
     "agg_stats_suite",
     "string_agg_sorted",
     "events_running_distinct",
-    "flagship_revenue_by_nation",
     "events_dwell_times",
     "events_funnel_horizon",
     "profile_orders",
@@ -84,7 +92,7 @@ _VERIFY_FIRST = [
     "events_rolling_median",
     "events_twap",
     "events_winsorized_stats",
-    # slots 27-33: the stale-green rotation queue inherited from the
+    # slots 29-35: the stale-green rotation queue inherited from the
     # r14 comments (r05 greens displaced by round78/round77 additions
     # and the late-r14 re-entries).
     "events_pattern_match",
@@ -94,7 +102,7 @@ _VERIFY_FIRST = [
     "events_cusum_changepoint",
     "sim_knn_classify",
     "events_entropy_profile",
-    # slots 34-45: the remaining r05/r06 stale greens oldest-first in
+    # slots 36-47: the remaining r05/r06 stale greens oldest-first in
     # their CORRECTNESS file order.
     "text_passage_dedup",
     "text_posting_lists",
@@ -108,12 +116,10 @@ _VERIFY_FIRST = [
     "training_negative_pairs",
     "diff_merkle_buckets",
     "events_sessionize_ids",
-    # slots 46-50: the oldest r07 greens not re-verified since.
+    # slots 48-50: the oldest r07 greens not re-verified since.
     "orders_reorder_rate",
     "text_hashing_trick",
     "events_user_type_profile",
-    "events_time_to_first_purchase",
-    "sim_matryoshka_recall",
 ]
 
 # Machine-checkable post-window rotation queue for the NEXT round
@@ -122,8 +128,11 @@ _VERIFY_FIRST = [
 # changes next round goes FIRST, then this queue in order — the
 # remaining r06 stale greens oldest-first in their CORRECTNESS file
 # order, skipping entries with newer green rows. Validated against
-# the registry in all_queries() alongside _VERIFY_FIRST.
+# the registry in all_queries() alongside _VERIFY_FIRST. Its head is
+# the two r07 greens pushed out of the window by the flagship entries.
 _NEXT_ROTATION_QUEUE = [
+    "events_time_to_first_purchase",
+    "sim_matryoshka_recall",
     "tpch_q11_important_stock",
     "events_attribution",
     "linkage_blocking_score",

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.io.readers import dataset_bytes, read_table
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ----------------------------------------------------------- TPC-H Q1 shape
@@ -233,15 +233,11 @@ WINDOW w AS (
 # full-sort window is the textbook straggler (each segment ≈ bytes/5 on
 # ONE task), so the query switches to the bit-identical distributed
 # rank. 4 GiB default ⇒ the window path never sorts more than ~1 GiB
-# per task; override via SPARK_GRAFT_RANK_SEGMENT_WINDOW_MAX_BYTES for
-# boxes with different per-task comfort.
+# per task; override via SPARK_GRAFT_RANK_SEGMENT_WINDOW_MAX_BYTES (read
+# at call time) for boxes with different per-task comfort.
 import os as _os
 
-_RANK_SEGMENT_WINDOW_MAX_BYTES = int(
-    _os.environ.get(
-        "SPARK_GRAFT_RANK_SEGMENT_WINDOW_MAX_BYTES", str(4 << 30)
-    )
-)
+_RANK_SEGMENT_WINDOW_MAX_BYTES = 4 << 30
 
 
 def _window_rank_ratios_distributed(j: DataFrame) -> DataFrame:
@@ -295,11 +291,13 @@ def _window_rank_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders")
     c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     j = o.join(c, o.o_custkey == c.c_custkey)
-    try:
-        orders_bytes = _os.stat(f"{sf_dir}/orders.parquet").st_size
-    except OSError:
-        orders_bytes = 0
-    if orders_bytes > _RANK_SEGMENT_WINDOW_MAX_BYTES:
+    max_bytes = int(
+        _os.environ.get(
+            "SPARK_GRAFT_RANK_SEGMENT_WINDOW_MAX_BYTES",
+            _RANK_SEGMENT_WINDOW_MAX_BYTES,
+        )
+    )
+    if dataset_bytes(spark, f"{sf_dir}/orders.parquet") > max_bytes:
         return _window_rank_ratios_distributed(j)
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("o_totalprice").asc(), F.col("o_orderkey").asc()

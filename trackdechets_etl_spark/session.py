@@ -13,6 +13,15 @@ Scale posture (100 TB target, tested on local[N]):
   *initial* number high-ish and let AQE shrink it.
 - Arrow enabled for the few Pandas-UDF paths (multimodal decode).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- PySpark's per-call call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``F.*``/DataFrame call records its Python call site through
+  about five Py4J round trips, about a third of query build time at
+  small scale. Errors then lose only that per-expression call site in
+  the "DataFrame query context"; Python tracebacks and JVM stacks stay.
+  Pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+  "true"}`` to get it back; PySpark reads the setting once per process,
+  so it must be set on the process's first session.
 """
 
 from __future__ import annotations
@@ -56,6 +65,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():
